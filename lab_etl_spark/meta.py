@@ -18,7 +18,6 @@ import json
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
 
 
 def with_unit(col: Column | str, name: str, unit: str | None) -> Column:
@@ -89,18 +88,6 @@ def add_with_units(df: DataFrame, out: str, *cols: str) -> DataFrame:
     unit = require_same_unit(df, *cols)
     expr = sum((F.col(c) for c in cols[1:]), F.col(cols[0]))
     return df.withColumn(out, with_unit(expr, out, unit))
-
-
-@F.udf(returnType=StringType())
-def blake2b_hex(content: bytes) -> str | None:
-    """BLAKE2b hex digest of raw file bytes (reference util.py:83-93).
-
-    Runs once per *file* (on binaryFile.content), never per row, so the
-    Python-UDF cost is bounded by file count, not data volume.
-    """
-    if content is None:
-        return None
-    return hashlib.blake2b(content).hexdigest()
 
 
 def attach_provenance(

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .graph import release_local_checkpoint
+from .iterate import checkpoint, iterate, release, undirected
 
 # trim + collapse internal whitespace + lowercase; identical regex semantics
 # exist in DuckDB for the oracle side (see queries/dedup.py).
@@ -149,40 +149,18 @@ def shingle_jaccard_pairs(
     )
 
 
-def _chk(df: DataFrame, checkpoint_dir: str | None) -> DataFrame:
-    """Lineage truncation for the iterative loops below.
-
-    Default: ``localCheckpoint`` — executor-local blocks, no extra I/O, the
-    right trade on a healthy cluster.  But those blocks die with their
-    executor, and at 100 TB a 30-round star job WILL see executor loss —
-    one lost block then fails the whole job with no recompute path (the
-    lineage was truncated).  Passing ``checkpoint_dir`` switches every
-    round to a reliable ``checkpoint()`` into that directory (HDFS/S3 at
-    cluster scale), making each round restartable at the cost of one
-    write+read per round.
-    """
-    if checkpoint_dir is None:
-        return df.localCheckpoint()
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir() != checkpoint_dir:
-        sc.setCheckpointDir(checkpoint_dir)
-    return df.checkpoint()
-
-
 def _symmetrize(
     edges: DataFrame,
     src: str,
     dst: str,
-    edges_distinct: bool,
     checkpoint_dir: str | None = None,
     working_partitions: int | None = None,
 ) -> DataFrame:
     """Undirected edge list → materialized symmetric (_s, _d) edge set.
 
-    ``edges_distinct=True`` promises the input has unique pairs with
-    src < dst (true for every *_pairs operator in this package) — then the
-    union with its own reversal cannot contain duplicates and the
-    dedup shuffle is skipped entirely, saving a full pass over the edge set.
+    No dedup pass: duplicate or both-direction input pairs only repeat
+    rows, and neither a min-label nor a star component can change with
+    an edge's multiplicity.
 
     ``working_partitions`` repartitions the symmetric edge set ONCE at
     entry, sizing every subsequent iteration round.  The dup graph is
@@ -195,25 +173,12 @@ def _symmetrize(
     input partitioning.  A plain ``coalesce`` would be wrong here — it
     folds the upstream pair-generation work into the reduced tasks.
     """
-    # explode(array(fwd, rev)) instead of unionAll(edges, edges-reversed):
-    # the union form runs the EDGE PRODUCER twice — exchange reuse covers
-    # the subtree below the producer's last shuffle, but the per-pair
-    # compute above it (the entity-resolution Levenshtein DP, the minhash
-    # array_intersect verify) is re-executed per branch.  One pass, same
-    # row multiset (round-14 A/B: 1.40s -> 0.78s for the ER edge set).
-    sym = edges.select(
-        F.explode(
-            F.array(
-                F.struct(F.col(src).alias("_s"), F.col(dst).alias("_d")),
-                F.struct(F.col(dst).alias("_s"), F.col(src).alias("_d")),
-            )
-        ).alias("_e")
-    ).select("_e._s", "_e._d")
-    if not edges_distinct:
-        sym = sym.distinct()
+    sym = undirected(
+        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d")), "_s", "_d"
+    )
     if working_partitions:
         sym = sym.repartition(working_partitions, "_s")
-    return _chk(sym, checkpoint_dir)
+    return checkpoint(sym, checkpoint_dir)
 
 
 def connected_components(
@@ -223,7 +188,6 @@ def connected_components(
     src: str = "a",
     dst: str = "b",
     max_iter: int = 20,
-    edges_distinct: bool = False,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Connected components by iterative min-label propagation.
@@ -236,30 +200,17 @@ def connected_components(
 
     Scale design: each round is one join + hash-aggregate shuffled on the
     node id; rounds needed = graph diameter (near-dup clusters are shallow —
-    single digits).  ``localCheckpoint`` truncates lineage each round so the
-    plan doesn't grow with iterations (the classic iterative-Spark failure
-    mode), and the convergence probe reads a 1-row count, not the data.
+    single digits).  The labels are checkpointed each round
+    (operators/iterate.py) so the plan doesn't grow with iterations, and
+    the convergence probe reads a 1-row count, not the data.
     For graphs with whale components, swap the propagation step for
     large-star/small-star; the loop shell stays the same.
     """
-    sym = _symmetrize(edges, src, dst, edges_distinct, checkpoint_dir)
-    # Only edge-touched vertices can ever change label; iterate over that
-    # subgraph only (in a real corpus non-duplicate docs dominate, so this
-    # shrinks every round's join from |corpus| to |dup-graph| rows) and
-    # union the untouched vertices back as self-labeled singletons at the
-    # end.  Round zero is folded into initialization: label = min(self,
-    # neighbors) directly — for the dominant 2-node-cluster case that is
-    # already the fixpoint, so the loop only runs confirmation rounds.
-    labels = _chk(
-        sym.groupBy("_s")
-        .agg(F.least(F.min("_d"), F.first("_s")).alias("component"))
-        .select(F.col("_s").alias("_id"), "component"),
-        checkpoint_dir,
-    )
-    labels, converged = _min_label_rounds(sym, labels, max_iter, checkpoint_dir)
+    sym = _symmetrize(edges, src, dst, checkpoint_dir)
+    labels, converged = _min_label_rounds(sym, max_iter, checkpoint_dir)
     # the final labels checkpoint no longer references the symmetric edge
     # set — release its blocks
-    release_local_checkpoint(sym)
+    release(sym)
     if not converged:
         # A silent wrong answer is worse than a loud one: a component with
         # diameter > max_iter would otherwise emit split clusters.
@@ -267,38 +218,52 @@ def connected_components(
             f"connected_components did not converge in {max_iter} rounds; "
             "raise max_iter (diameter exceeds the round budget)"
         )
-    all_labeled = vertices.select(F.col(id_col).alias("_id")).join(
-        labels, "_id", "left"
-    )
-    return all_labeled.select(
-        F.col("_id").alias(id_col),
-        F.coalesce("component", "_id").alias("component"),
+    return _label_vertices(vertices, id_col, labels)
+
+
+def _label_vertices(
+    vertices: DataFrame, id_col: str, labels: DataFrame
+) -> DataFrame:
+    """(``id_col``, component) for every vertex: ``labels`` (_id,
+    component) covers only edge-touched vertices, so every other vertex
+    comes back as a self-labeled singleton."""
+    return (
+        vertices.select(F.col(id_col).alias("_id"))
+        .join(labels, "_id", "left")
+        .select(
+            F.col("_id").alias(id_col),
+            F.coalesce("component", "_id").alias("component"),
+        )
     )
 
 
 def _min_label_rounds(
-    sym: DataFrame,
-    labels: DataFrame,
-    rounds: int,
-    checkpoint_dir: str | None = None,
+    sym: DataFrame, rounds: int, checkpoint_dir: str | None = None
 ) -> tuple[DataFrame, bool]:
-    """Run up to ``rounds`` min-label propagation steps; returns
-    (labels, converged).  Each step is one join + hash-aggregate; the
-    previous label rides along through the checkpoint so convergence is read
-    back with a single cheap aggregate over the materialized step — no
-    second join against the old labels (half the per-round job cost).
+    """Min-label propagation over the symmetric edge set ``sym``: up to
+    ``rounds`` steps; returns ((_id, component) labels, converged).
 
-    Superseded label checkpoints (including the caller's initial one) have
-    their blocks released each round — without this a 30-round job pins 30
-    generations of labels in executor storage."""
-    prev_ck = labels  # the caller's initial _chk frame (root = LogicalRDD)
-    for _ in range(rounds):
+    Only edge-touched vertices can ever change label, so the loop runs
+    over that subgraph only (in a real corpus non-duplicate docs dominate,
+    so this shrinks every round's join from |corpus| to |dup-graph| rows);
+    :func:`_label_vertices` adds the untouched ones back.  Round zero is
+    folded into initialization: label = min(self, neighbors) directly —
+    for the dominant 2-node-cluster case that is already the fixpoint, so
+    the loop only runs confirmation rounds.
+
+    Each step is one join + hash-aggregate; the previous label rides along
+    through the checkpoint as ``_old`` so convergence is read back with a
+    single cheap aggregate over the materialized step — no second join
+    against the old labels (half the per-round job cost)."""
+
+    def step(state: DataFrame) -> DataFrame:
+        labels = state.select("_id", "component")
         nbr_min = (
             sym.join(labels, sym._d == labels._id)
             .groupBy("_s")
             .agg(F.min("component").alias("_nbr_min"))
         )
-        stepped = (
+        return (
             labels.withColumnRenamed("component", "_old")
             .join(nbr_min, F.col("_id") == nbr_min._s, "left")
             .select(
@@ -309,16 +274,23 @@ def _min_label_rounds(
                 "_old",
             )
         )
-        stepped = _chk(stepped, checkpoint_dir)
-        changed = (
-            stepped.filter(F.col("component") != F.col("_old")).limit(1).count()
+
+    def unchanged(prev: DataFrame, new: DataFrame) -> bool:
+        return (
+            new.filter(F.col("component") != F.col("_old")).limit(1).count()
+            == 0
         )
-        release_local_checkpoint(prev_ck)  # superseded by stepped
-        prev_ck = stepped
-        labels = stepped.select("_id", "component")
-        if changed == 0:
-            return labels, True
-    return labels, False
+
+    seed = checkpoint(
+        sym.groupBy("_s")
+        .agg(F.least(F.min("_d"), F.first("_s")).alias("component"))
+        .select(F.col("_s").alias("_id"), "component"),
+        checkpoint_dir,
+    )
+    state, converged = iterate(
+        seed, step, rounds, until=unchanged, checkpoint_dir=checkpoint_dir
+    )
+    return state.select("_id", "component"), converged
 
 
 def connected_components_star(
@@ -355,7 +327,7 @@ def connected_components_star(
         return df.filter(F.col("_u") != F.col("_v")).distinct()
 
     def large_star(e: DataFrame) -> DataFrame:
-        sym = e.unionAll(e.select(F.col("_v").alias("_u"), F.col("_u").alias("_v")))
+        sym = undirected(e, "_u", "_v")
         m = sym.groupBy("_u").agg(
             F.least(F.min("_v"), F.first("_u")).alias("_m")
         )
@@ -376,41 +348,37 @@ def connected_components_star(
         centers = m.select(F.col("_u"), F.col("_m").alias("_v"))
         return dedup(children.unionAll(centers))
 
-    def fingerprint(e: DataFrame):
-        row = e.agg(
+    fingerprints = []  # one per round; the input edge set is not probed
+
+    def fixpoint(prev: DataFrame, new: DataFrame) -> bool:
+        row = new.agg(
             F.count(F.lit(1)).alias("n"),
             F.expr("bit_xor(xxhash64(_u, _v))").alias("h"),
         ).collect()[0]
-        return (row["n"], row["h"])
+        fingerprints.append((row["n"], row["h"]))
+        return len(fingerprints) > 1 and fingerprints[-1] == fingerprints[-2]
 
-    cur = _chk(
+    cur = checkpoint(
         dedup(edges.select(F.col(src).alias("_u"), F.col(dst).alias("_v"))),
         checkpoint_dir,
     )
-    prev_fp = None
-    for _ in range(max_iter):
-        prev_ck = cur
-        cur = _chk(small_star(large_star(cur)), checkpoint_dir)
-        fp = fingerprint(cur)
-        release_local_checkpoint(prev_ck)  # superseded by the new round
-        if fp == prev_fp:
-            break
-        prev_fp = fp
-    else:
+    cur, converged = iterate(
+        cur,
+        lambda e: small_star(large_star(e)),
+        max_iter,
+        until=fixpoint,
+        checkpoint_dir=checkpoint_dir,
+    )
+    if not converged:
         raise RuntimeError(
             f"connected_components_star did not converge in {max_iter} rounds"
         )
     # At fixpoint every edge is (node, component-min); roots appear only on
     # the right side.  groupBy guards against any residual multi-parent row.
-    labels = cur.groupBy("_u").agg(F.min("_v").alias("component"))
-    return (
-        vertices.select(F.col(id_col).alias("_u"))
-        .join(labels, "_u", "left")
-        .select(
-            F.col("_u").alias(id_col),
-            F.coalesce("component", "_u").alias("component"),
-        )
+    labels = cur.groupBy(F.col("_u").alias("_id")).agg(
+        F.min("_v").alias("component")
     )
+    return _label_vertices(vertices, id_col, labels)
 
 
 def connected_components_auto(
@@ -421,7 +389,6 @@ def connected_components_auto(
     dst: str = "b",
     propagation_rounds: int = 3,
     max_iter: int = 30,
-    edges_distinct: bool = False,
     checkpoint_dir: str | None = None,
     working_partitions: int | None = None,
 ) -> DataFrame:
@@ -444,17 +411,9 @@ def connected_components_auto(
     contraction — the min node's label is itself — so the composed labeling
     equals what either algorithm alone would produce.
     """
-    sym = _symmetrize(
-        edges, src, dst, edges_distinct, checkpoint_dir, working_partitions
-    )
-    labels = _chk(
-        sym.groupBy("_s")
-        .agg(F.least(F.min("_d"), F.first("_s")).alias("component"))
-        .select(F.col("_s").alias("_id"), "component"),
-        checkpoint_dir,
-    )
+    sym = _symmetrize(edges, src, dst, checkpoint_dir, working_partitions)
     labels, converged = _min_label_rounds(
-        sym, labels, propagation_rounds, checkpoint_dir
+        sym, propagation_rounds, checkpoint_dir
     )
     if not converged:
         l_s = labels.select(
@@ -485,13 +444,10 @@ def connected_components_auto(
             )
             .select("_id", F.col("_final").alias("component"))
         )
-    all_labeled = vertices.select(F.col(id_col).alias("_id")).join(
-        labels, "_id", "left"
-    )
-    return all_labeled.select(
-        F.col("_id").alias(id_col),
-        F.coalesce("component", "_id").alias("component"),
-    )
+    # the star's first round materialized the contraction: nothing left
+    # reads the symmetric edge set
+    release(sym)
+    return _label_vertices(vertices, id_col, labels)
 
 
 #: modulus for the portable universal-hash MinHash family (Mersenne prime).

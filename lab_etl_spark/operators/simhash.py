@@ -36,32 +36,6 @@ def _tok_hash_duck(word: str) -> str:
     return f"CAST(('0x' || SUBSTRING(MD5({word}), 1, 8)) AS BIGINT)"
 
 
-def simhash_expr_spark() -> str:
-    """Spark SQL expression: word array ``_w`` → BIGINT simhash signature.
-
-    Single pass: md5 hashed ONCE per word (``transform``), then one
-    ``aggregate`` folds a 32-long bit-sum accumulator array.  (The obvious
-    alternative — one ``aggregate(...)`` per bit — re-hashes every word 32×
-    and emits a codegen class so large that Janino compilation alone takes
-    minutes and evicts the rest of the session's compiled stages.)
-
-    Kept for per-row use (e.g. streaming enrichment); the batch pipeline
-    below uses the explode → hash-aggregate form instead, which stays in
-    whole-stage codegen and vectorizes (~5× faster and shuffle-friendly).
-    """
-    return (
-        f"aggregate("
-        f"  transform(_w, w -> {_tok_hash_sql('w')}),"
-        f"  array_repeat(0L, {BITS}),"
-        f"  (acc, h) -> zip_with(acc, sequence(0, {BITS - 1}),"
-        f"    (a, j) -> a + IF((h div shiftleft(1L, j)) % 2 = 1, 1L, -1L)),"
-        f"  acc -> aggregate(zip_with(acc, sequence(0, {BITS - 1}),"
-        f"    (s, j) -> IF(s > 0, shiftleft(1L, j), 0L)),"
-        f"    0L, (a, x) -> a + x)"
-        f")"
-    )
-
-
 def simhash_sql_duck(norm_text: str) -> str:
     """DuckDB expression computing the identical signature from raw text."""
     words = f"string_split_regex(trim({norm_text}), ' ')"

@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from .iterate import checkpoint, iterate, undirected
+
 # Sequential double fold: dot(a, b) and ||v||².
 DOT = (
     "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
@@ -202,10 +204,12 @@ def ivf_assign(
 
     The centroid table stays O(n_clusters × dim) — always broadcastable —
     so the corpus is never shuffled during training; only the tiny
-    per-dimension partial sums move.  Centroids and the final assignment
-    are localCheckpoint'ed: without that, every downstream reference
-    (probe cross-join, candidate scoring) re-executes the whole Lloyd
-    lineage — measured as 20 parquet scans of the corpus in one plan.
+    per-dimension partial sums move.  The centroids (once per Lloyd step,
+    on operators/iterate.py, which releases the superseded tables) and
+    the final assignment are checkpointed: without that, every downstream
+    reference (probe cross-join, candidate scoring) re-executes the whole
+    Lloyd lineage — measured as 20 parquet scans of the corpus in one
+    plan.
 
     Returns ``(assigned_corpus, centroids)``: the corpus with a ``cid``
     cluster-id column, and the (cid, c_emb) centroid table.
@@ -234,7 +238,7 @@ def ivf_assign(
         F.expr("transform(c_emb, x -> CAST(x AS DOUBLE))").alias("c_emb"),
     )
 
-    def nearest(df: DataFrame) -> DataFrame:
+    def nearest(df: DataFrame, centroids: DataFrame) -> DataFrame:
         dot = F.expr(DOT.format(a="emb_d", b="c_emb"))
         cnorm = F.expr(f"SQRT({SQNORM.format(v='c_emb')})")
         cos = F.try_divide(dot, F.col("q_norm") * cnorm)
@@ -249,11 +253,10 @@ def ivf_assign(
         F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("emb_d"),
         F.col("_nrm").alias("q_norm"),
     )
-    centroids = centroids.localCheckpoint()
-    for _ in range(n_iter):
-        assigned = nearest(prepared)
-        centroids = (
-            prepared.join(assigned, "vec_id")
+
+    def lloyd(centroids: DataFrame) -> DataFrame:
+        return (
+            prepared.join(nearest(prepared, centroids), "vec_id")
             .select("cid", F.posexplode("emb_d").alias("pos", "x"))
             .groupBy("cid", "pos")
             .agg(F.avg("x").alias("m"))
@@ -264,9 +267,10 @@ def ivf_assign(
                     " s -> s.m)"
                 ).alias("c_emb")
             )
-            .localCheckpoint()
         )
-    final = nearest(prepared).localCheckpoint()
+
+    centroids, _ = iterate(checkpoint(centroids), lloyd, n_iter)
+    final = checkpoint(nearest(prepared, centroids))
     return corpus.drop("_nrm").join(final, "vec_id"), centroids
 
 
@@ -737,7 +741,8 @@ def graph_ann_topk(
         nearest-hub cell (symmetrized) — pair work is Σ|cell|² on
         bounded cells (hubs ∝ corpus), never n²;
       * search = exact scoring of the tiny hub layer picks 2 entry nodes,
-        then ``hops`` unrolled beam steps: expand the beam along layer-0
+        then ``hops`` beam steps, each one checkpointed round on
+        operators/iterate.py: expand the beam along layer-0
         edges (vertex-keyed join), score candidates against the BROADCAST
         query vectors, keep the top-``beam`` by (cosine DESC, vec_id).
 
@@ -798,8 +803,8 @@ def graph_ann_topk(
         )
         .filter(F.col("_best").isNotNull())
         .select("vec_id", "v", "nrm", F.col("_best.hub_id").alias("cell"))
-        .persist()  # feeds both sides of the edge join; ContextCleaner
-        # reclaims the blocks when the frame's reference dies
+        .persist()  # feeds both sides of the edge join and every hop;
+        # unpersisted once the hops are done
     )
 
     # layer-0 edges: top-m cosine neighbors within the cell, symmetrized.
@@ -834,15 +839,13 @@ def graph_ann_topk(
         F.col("cell").alias("src"), F.col("vec_id").alias("dst")
     ).filter(F.col("src") != F.col("dst"))
     edges = (
-        knn.unionByName(
-            knn.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
+        undirected(knn, "src", "dst")
         .unionByName(descent)
         .distinct()
-        .persist()  # O(n·(m+1)) rows referenced by every unrolled hop —
-        # without the persist each hop re-runs the Σ|cell|² edge-build
-        # join (measured 3x the whole query's cost at sf0.1); the
-        # ContextCleaner reclaims the blocks with the frame reference
+        .persist()  # O(n·(m+1)) rows referenced by every hop — without
+        # the persist each hop re-runs the Σ|cell|² edge-build join
+        # (measured 3x the whole query's cost at sf0.1); unpersisted
+        # once the hops are done
     )
 
     q = (
@@ -873,8 +876,18 @@ def graph_ann_topk(
         F.expr(DOT.format(a="qv", b="v")), F.col("qnrm") * F.col("nrm")
     )
     w_beam = W.partitionBy("query_id").orderBy(F.desc("_cc"), F.asc("vec_id"))
-    beam_scored = None
-    for _ in range(hops):
+
+    def score(cand: DataFrame) -> DataFrame:
+        return (
+            cand.join(corpus, "vec_id")
+            .join(qb, "query_id")
+            .withColumn("_cc", c_cos)
+            .withColumn("rn", F.row_number().over(w_beam))
+            .filter(F.col("rn") <= beam)
+            .select("query_id", "vec_id", "_cc")
+        )
+
+    def hop(cur: DataFrame) -> DataFrame:
         # One exchange per hop instead of two: the candidate dedup used
         # to be a ``.distinct()`` — an exchange hashed on BOTH columns,
         # which cannot serve the query_id-keyed beam window, so every
@@ -883,36 +896,26 @@ def graph_ann_topk(
         # of the partitioning key) AND the window reuse the same
         # exchange; the dedup itself is unchanged (exact duplicates of a
         # 2-column frame either way).
-        expanded = (
-            beam_df.unionByName(
-                beam_df.join(
-                    edges, beam_df["vec_id"] == edges["src"], "inner"
-                ).select("query_id", F.col("dst").alias("vec_id"))
+        b = cur.select("query_id", "vec_id")
+        return score(
+            b.unionByName(
+                b.join(edges, b["vec_id"] == edges["src"], "inner").select(
+                    "query_id", F.col("dst").alias("vec_id")
+                )
             )
             .repartition("query_id")
             .dropDuplicates(["query_id", "vec_id"])
         )
-        beam_scored = (
-            expanded.join(corpus, "vec_id")
-            .join(qb, "query_id")
-            .withColumn("_cc", c_cos)
-            .withColumn("rn", F.row_number().over(w_beam))
-            .filter(F.col("rn") <= beam)
-        )
-        beam_df = beam_scored.select("query_id", "vec_id")
 
-    if beam_scored is None:
-        # hops=0: no beam step ran, so score the entry-hub beam directly
-        # (the pre-hop-fusion behavior — the readout below otherwise
-        # dereferences None; ADVICE round 13).  Same scoring expression
-        # and window as a hop, minus the edge expansion.
-        beam_scored = (
-            beam_df.join(corpus, "vec_id")
-            .join(qb, "query_id")
-            .withColumn("_cc", c_cos)
-            .withColumn("rn", F.row_number().over(w_beam))
-            .filter(F.col("rn") <= beam)
-        )
+    # each hop's scored beam is checkpointed (operators/iterate.py), so
+    # hop h plans against a materialized beam, not h unrolled hops; with
+    # hops=0 the entry-hub beam is scored directly
+    if hops:
+        beam_scored, _ = iterate(beam_df, hop, hops)
+    else:
+        beam_scored = score(beam_df)
+    edges.unpersist()
+    cells.unpersist()
 
     # Readout reuses the FINAL hop's scored beam instead of re-joining
     # corpus and queries to recompute the identical cosine (c_cos is a

@@ -114,7 +114,7 @@ _WINDOW_FRONT = [
     # oracle strings are frozen; a rewritten engine must see a driver
     # row against its unchanged oracle before the round ends).
     # Round-14 engine changes: one-pass explode symmetrize
-    # (operators/dedup.py `_symmetrize`, operators/graph.py `_undirect`)
+    # (since folded into operators/iterate.py `undirected`)
     # + banded threshold Levenshtein (queries/advanced.py) + graph_ann
     # hops=0 guard (operators/similarity.py; default path plan-identical
     # but the operator file changed).
@@ -124,6 +124,11 @@ _WINDOW_FRONT = [
     "q_kcore",
     "q_label_propagation",
     "q_graph_ann",
+    # loops moved onto operators/iterate.py (per-round checkpoints); the
+    # other loop queries are already fronted above
+    "q_pagerank",
+    "q_shortest_path",
+    "q_similarity_ivf",
 ]
 
 # Last driver-GREEN round per query, mechanically derived from

@@ -702,8 +702,9 @@ def _pagerank_oracle(iters: int = 3) -> str:
     "hash join plus one dst-keyed aggregation whose contribution sum "
     "accumulates in DECIMAL(38,9), making ranks bit-identical across "
     "engines, partitionings, and cluster sizes (the oracle unrolls the "
-    "same iterations).  At scale: persist the edge list and checkpoint "
-    "rank lineage every ~10 rounds, as the CC operator does.",
+    "same iterations).  The edge list is persisted and the ranks are "
+    "checkpointed every round (operators/iterate.py), so lineage stays "
+    "O(1) at any iteration count.",
 )
 def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import pagerank
@@ -1256,7 +1257,6 @@ def q_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         id_col="p_partkey",
         src="pa",
         dst="pb",
-        edges_distinct=True,
         # ~220k-edge dup graph at sf0.1: iterate at edge-set size, not at
         # the pair-producer's 64 partitions (see _symmetrize docstring)
         working_partitions=8,

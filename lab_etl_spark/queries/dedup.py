@@ -384,9 +384,6 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         id_col="doc_id",
         src="doc_a",
         dst="doc_b",
-        # pair operator emits unique doc_a < doc_b rows → skip the
-        # symmetrization dedup shuffle
-        edges_distinct=True,
         # the near-dup graph is tiny relative to the corpus; iterate at
         # edge-set size, not the shingle pipeline's partition count
         working_partitions=4,

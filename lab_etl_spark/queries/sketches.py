@@ -688,43 +688,44 @@ BFS_MAX_HOPS = 3
     "min-dist aggregate collapses re-reached nodes — the Pregel iteration "
     "pattern expressed as joins, like q_pagerank but with integer "
     "distances (bit-exact in any engine, no decimal machinery needed).  "
-    "Hop count is fixed, so the lineage is a bounded 3-join plan; the "
-    "DuckDB oracle walks the same graph with a bounded recursive CTE.",
+    "The loop state is one (node, dist) frame, checkpointed per hop "
+    "(operators/iterate.py); each hop expands only the previous hop's "
+    "level and keeps the min dist per node.  The DuckDB oracle walks the "
+    "same graph with a bounded recursive CTE.",
     tags=["graph"],
 )
 def q_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.iterate import checkpoint, iterate, release, undirected
+
     # The symmetrized edge list feeds the seed aggregate plus one join per
-    # hop; unpersisted, Spark re-derives the whole edge pipeline (scan →
-    # posting lists → pair counts → support filter) four times — measured
-    # 3.1 s → 1.3 s at sf0.1 with the pagerank persistence discipline
-    # (operators/graph.py): persist the edges, materialize the result via
-    # eager localCheckpoint, release the cached blocks before returning.
-    edges = copurchase_edges(spark, sf_dir)
-    sym = edges.select(
-        F.col("p1").alias("src"), F.col("p2").alias("dst")
-    ).unionAll(
-        edges.select(F.col("p2").alias("src"), F.col("p1").alias("dst"))
-    ).persist()
-    dist = (
-        sym.agg(F.min("src").alias("node"))
-        .select("node", F.lit(0).alias("dist"))
+    # hop; materialized once, or Spark re-derives the whole edge pipeline
+    # (scan → posting lists → pair counts → support filter) every hop.
+    sym = checkpoint(undirected(copurchase_edges(spark, sf_dir), "p1", "p2"))
+    seed = sym.agg(F.min("p1").alias("node")).select(
+        "node", F.lit(0).alias("dist")
     )
-    frontier = dist
-    for h in range(1, BFS_MAX_HOPS + 1):
-        frontier = (
-            frontier.select(F.col("node").alias("src"))
-            .join(sym, "src")
-            .select(F.col("dst").alias("node"), F.lit(h).alias("dist"))
-            .distinct()  # collapse the frontier before the next expansion
+    hops = iter(range(1, BFS_MAX_HOPS + 1))
+
+    def expand(dist: DataFrame) -> DataFrame:
+        # A node first reached at hop h has dist h; nodes reached earlier
+        # re-enter with a larger dist and keep their min, so the last
+        # level is exactly the nodes with dist h-1.
+        h = next(hops)
+        reached = (
+            dist.filter(F.col("dist") == h - 1)
+            .select(F.col("node").alias("p1"))
+            .join(sym, "p1")
+            .select(F.col("p2").alias("node"), F.lit(h).alias("dist"))
         )
-        dist = dist.unionAll(frontier)
-    out = dist.groupBy(F.col("node").alias("part_id")).agg(
-        F.min("dist").alias("dist")
-    )
-    try:
-        return out.localCheckpoint(eager=True)
-    finally:
-        sym.unpersist()
+        return (
+            dist.unionAll(reached)
+            .groupBy("node")
+            .agg(F.min("dist").alias("dist"))
+        )
+
+    dist, _ = iterate(seed, expand, BFS_MAX_HOPS)
+    release(sym)
+    return dist.select(F.col("node").alias("part_id"), "dist")
 
 
 # ---------------------------------------------------------------------------

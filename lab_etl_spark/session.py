@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 # Runtime-settable SQL confs applied to ANY session our code touches (including
@@ -49,12 +50,28 @@ def tune(spark: SparkSession) -> SparkSession:
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
+        except AnalysisException:
             pass  # static conf on this build — session factory already set it
     return spark
 
 
+def _extra_conf() -> list[tuple[str, str]]:
+    """``SPARK_GRAFT_EXTRA_CONF``: semicolon-separated k=v pairs; an item
+    without ``=`` is a typo, not an empty setting, so it raises."""
+    extra = os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")
+    pairs = []
+    for item in filter(None, (s.strip() for s in extra.split(";"))):
+        k, eq, v = item.partition("=")
+        if not eq:
+            raise ValueError(
+                f"SPARK_GRAFT_EXTRA_CONF item {item!r} is not a k=v pair"
+            )
+        pairs.append((k.strip(), v.strip()))
+    return pairs
+
+
 def get_spark(app_name: str = "lab_etl_spark") -> SparkSession:
+    extra = _extra_conf()  # before the shared builder is touched
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -77,10 +94,8 @@ def get_spark(app_name: str = "lab_etl_spark") -> SparkSession:
     # Conf overrides without code edits (A/B experiments, cluster
     # deployments): semicolon-separated k=v pairs, applied LAST so they
     # win over the defaults above.  Empty/unset is the shipped default.
-    extra = os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")
-    for item in filter(None, (s.strip() for s in extra.split(";"))):
-        k, _, v = item.partition("=")
-        builder = builder.config(k.strip(), v.strip())
+    for k, v in extra:
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return tune(spark)

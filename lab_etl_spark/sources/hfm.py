@@ -271,16 +271,3 @@ def scan_hfm(spark: SparkSession, path_glob: str) -> DataFrame:
         .mapInPandas(hfm_parse_batch, _SCAN_SCHEMA)
         .transform(apply_hfm_units)
     )
-
-
-def conductivity_table(df: DataFrame) -> DataFrame:
-    """Project a unified scan down to the reference's conductivity schema
-    (fox_hfm_parser.py:421-429)."""
-    return df.filter(F.col("run_mode") == "conductivity").select(
-        "source_file",
-        "setpoint",
-        "upper_temperature",
-        "lower_temperature",
-        "upper_thermal_conductivity",
-        "lower_thermal_conductivity",
-    )

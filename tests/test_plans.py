@@ -335,14 +335,15 @@ _SWEEP_SKIP = {
     "q_version_diff",  # eager snapshot write + DV commit at build time
     "q_upsert_dv",  # eager snapshot write + DV commit at build time
     "q_cdf_consumer",  # eager snapshot write + 2 cursor polls at build time
-    # eager localCheckpoint materialization (unpersist discipline)
+    # per-round state checkpoints (operators/iterate.py loops)
     "q_pagerank",
     "q_shortest_path",
+    "q_kcore",
+    "q_label_propagation",
     "q_triangle_count",  # edges + oriented edges checkpointed (reused 3x/2x)
-    "q_kcore",  # per-round frontier localCheckpoint (CC discipline)
-    "q_label_propagation",  # per-round label localCheckpoint (CC discipline)
     "q_mutual_information",  # joint-count table checkpointed (reused 4x)
-    "q_attribution_markov",  # per-iteration chain checkpoints (kcore discipline)
+    # collects the transition counts for its driver-side chain fold
+    "q_attribution_markov",
 }
 
 

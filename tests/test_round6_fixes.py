@@ -1,6 +1,7 @@
-"""Round-6 hardening: kcore input validation + checkpoint-block release,
-typed stats canonicalization in the commit log, and atomic WebDataset
-shard publication."""
+"""Round-6 hardening: kcore input validation, checkpoint-block release
+and loud failure for every loop operator (operators/iterate.py), typed
+stats canonicalization in the commit log, atomic WebDataset shard
+publication, and session-conf validation."""
 
 from __future__ import annotations
 
@@ -9,14 +10,18 @@ import glob
 import os
 
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from lab_etl_spark.operators.commitlog import LoggedTable, _canon_stat
-from lab_etl_spark.operators.graph import (
-    kcore,
-    label_propagation,
-    release_local_checkpoint,
+from lab_etl_spark.operators.dedup import (
+    connected_components,
+    connected_components_star,
 )
+from lab_etl_spark.operators.graph import kcore, label_propagation, pagerank
+from lab_etl_spark.operators.iterate import iterate, release
+from lab_etl_spark.operators.similarity import graph_ann_topk, ivf_assign
+from lab_etl_spark.queries import load_all
 
 
 def _edges(spark):
@@ -42,35 +47,123 @@ def _persistent_ids(spark) -> set[int]:
     return {int(k) for k in jmap.keySet().toArray()}
 
 
-def test_kcore_releases_superseded_checkpoint_blocks(spark):
-    # und + one frontier per round are localCheckpoint'ed; after the
-    # result is materialized only the RESULT's blocks may remain (the
-    # pagerank no-session-lifetime-footprint contract, RDD-level edition).
-    before = _persistent_ids(spark)
-    out = kcore(_edges(spark), k=3, rounds=3)
-    got = {r.v: r.deg for r in out.collect()}
-    assert got == {1: 3, 2: 3, 3: 3, 4: 3}  # the 4-clique, pendant peeled
-    new = _persistent_ids(spark) - before
-    assert len(new) == 1, (
-        f"kcore leaked frontier/edge checkpoint blocks: {len(new)} new "
-        "persistent RDDs (expected only the returned frame's)"
-    )
-    release_local_checkpoint(out)
-    assert _persistent_ids(spark) & new == set()
+def _vectors(spark):
+    # two well-separated directions, 6 vectors each
+    rows = [
+        (c * 6 + j, [1.0 - c, float(c), 0.1 * (j + 1)])
+        for c in range(2)
+        for j in range(6)
+    ]
+    return spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
 
 
-def test_label_propagation_releases_superseded_checkpoint_blocks(spark):
-    before = _persistent_ids(spark)
-    out = label_propagation(_edges(spark), rounds=2)
-    labels = {r.v: r.label for r in out.collect()}
-    assert set(labels) == {1, 2, 3, 4, 5, 6}
-    new = _persistent_ids(spark) - before
-    assert len(new) == 1, (
-        f"label_propagation leaked label/edge checkpoint blocks: "
-        f"{len(new)} new persistent RDDs"
+def _directed(spark):
+    e = _edges(spark)
+    return e.select(F.col("p1").alias("src"), F.col("p2").alias("dst")).union(
+        e.select(F.col("p2").alias("src"), F.col("p1").alias("dst"))
     )
-    release_local_checkpoint(out)
-    assert _persistent_ids(spark) & new == set()
+
+
+def _vertices(spark):
+    return spark.range(1, 8).withColumnRenamed("id", "doc_id")
+
+
+#: every operator on operators/iterate.py -> the frames it returns
+_LOOPS = {
+    "pagerank": lambda spark, sf: [pagerank(_directed(spark), iters=3)],
+    "kcore": lambda spark, sf: [kcore(_edges(spark), k=3, rounds=3)],
+    "label_propagation": lambda spark, sf: [
+        label_propagation(_edges(spark), rounds=2)
+    ],
+    "min_label_rounds": lambda spark, sf: [
+        connected_components(
+            _vertices(spark), _edges(spark), "doc_id", "p1", "p2"
+        )
+    ],
+    "connected_components_star": lambda spark, sf: [
+        connected_components_star(
+            _vertices(spark), _edges(spark), "doc_id", "p1", "p2"
+        )
+    ],
+    "ivf_assign": lambda spark, sf: list(
+        ivf_assign(_vectors(spark), n_clusters=2, n_iter=3)
+    ),
+    "graph_ann_topk": lambda spark, sf: [
+        graph_ann_topk(
+            _vectors(spark), _vectors(spark).limit(3), n_hubs=2, m=2,
+            beam=3, hops=3, k=2,
+        )
+    ],
+    "q_shortest_path": lambda spark, sf: [
+        load_all()["q_shortest_path"].fn(spark, sf)
+    ],
+}
+
+
+@pytest.mark.parametrize("op", sorted(_LOOPS))
+def test_loop_releases_superseded_checkpoint_blocks(spark, sf_dir, op):
+    # Every round's state is checkpointed; once the result is
+    # materialized only the RETURNED frames' blocks may remain — no
+    # superseded round, no loop-invariant edge/corpus cache (the pagerank
+    # no-session-lifetime-footprint contract, RDD-level edition).
+    before = _persistent_ids(spark)
+    frames = _LOOPS[op](spark, sf_dir)
+    for df in frames:
+        df.collect()
+    new = _persistent_ids(spark) - before
+    assert len(new) == len(frames), (
+        f"{op} leaked checkpoint/cache blocks: {len(new)} new persistent "
+        f"RDDs, expected one per returned frame ({len(frames)})"
+    )
+
+
+def test_iterate_fails_loudly_when_a_rounds_blocks_are_lost(spark):
+    # A step that builds on a state whose checkpoint blocks are gone (an
+    # executor lost them, or a hop released a still-referenced frame)
+    # has no lineage to recompute from: the loop must raise, never
+    # return a partial answer.
+    def step(state):
+        release(state)  # round 2 loses round 1's checkpoint mid-loop
+        return state.select((F.col("x") + 1).alias("x"))
+
+    seed = spark.range(4).select(F.col("id").alias("x"))
+    with pytest.raises(Py4JJavaError, match="CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"):
+        iterate(seed, step, 3)
+
+
+def test_iterate_reports_nonconvergence(spark):
+    seed = spark.range(3)
+    state, converged = iterate(
+        seed, lambda s: s.select("id"), 2, until=lambda prev, new: False
+    )
+    assert converged is False
+    assert sorted(r.id for r in state.collect()) == [0, 1, 2]
+    release(state)
+    # the probe fires on the first round it returns True
+    state, converged = iterate(
+        seed, lambda s: s.select("id"), 5, until=lambda prev, new: True
+    )
+    assert converged is True
+    release(state)
+
+
+def test_star_raises_when_the_round_budget_ends_before_fixpoint(spark):
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(24)], "a bigint, b bigint"
+    )
+    vertices = spark.range(25).withColumnRenamed("id", "doc_id")
+    with pytest.raises(RuntimeError, match="did not converge in 2 rounds"):
+        connected_components_star(vertices, chain, "doc_id", max_iter=2)
+
+
+def test_extra_conf_rejects_items_without_equals(monkeypatch):
+    from lab_etl_spark.session import get_spark
+
+    monkeypatch.setenv(
+        "SPARK_GRAFT_EXTRA_CONF", "spark.sql.shuffle.partitions=4;spark.oops"
+    )
+    with pytest.raises(ValueError, match="'spark.oops'"):
+        get_spark("extra-conf-check")
 
 
 def test_canon_stat_typed_string_column_stays_lexicographic():

@@ -87,7 +87,6 @@ def test_connected_components_rounds_scale_with_diameter_not_size(spark, n):
             id_col="doc_id",
             src="doc_a",
             dst="doc_b",
-            edges_distinct=True,
             working_partitions=4,
         )
         return (
