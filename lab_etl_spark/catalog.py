@@ -143,10 +143,10 @@ def scratch_dir(family: str, sf_dir: str) -> str:
                             shutil.rmtree(path, ignore_errors=True)
                     elif alive is None and age > _SCRATCH_ORPHAN_TTL_S:
                         shutil.rmtree(path, ignore_errors=True)
-            except OSError:
-                pass
-    except OSError:
-        pass
+            except FileNotFoundError:
+                pass  # another process's sweep removed it after listdir
+    except FileNotFoundError:
+        pass  # no warehouse yet: nothing to sweep
     key = hashlib.sha1(os.path.realpath(sf_dir).encode()).hexdigest()[:8]
     return os.path.join(
         _WAREHOUSE, f"{mine}{key}_{uuid.uuid4().hex[:8]}"

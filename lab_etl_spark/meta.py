@@ -153,7 +153,7 @@ def detect_encoding_bytes(head: bytes) -> str:
         if best is not None:
             detected = best.encoding
     except ImportError:
-        pass
+        pass  # charset_normalizer is optional; no sniff reads as utf-8
     return _spark_charset(detected)
 
 

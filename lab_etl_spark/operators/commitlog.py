@@ -618,8 +618,8 @@ class LoggedTable:
                     ):
                         shutil.rmtree(path, ignore_errors=True)
                         removed.append(name)
-                except OSError:
-                    pass
+                except FileNotFoundError:
+                    pass  # a concurrent vacuum reclaimed it after listdir
         if len(vs) > keep:
             # CONSOLIDATE before unlinking: the oldest KEPT manifest may
             # be an incremental delta whose replay chain runs through
@@ -662,8 +662,8 @@ class LoggedTable:
                     os.unlink(
                         os.path.join(self.log_dir, f"{v:0{_W}d}.json")
                     )
-                except OSError:
-                    pass
+                except FileNotFoundError:
+                    pass  # a concurrent vacuum unlinked it first
             # sweep files_* sidecars no surviving manifest references —
             # with the same 2h age grace as un-manifested snapshot dirs
             # (a CONCURRENT commit writes its sidecar BEFORE claiming
@@ -677,8 +677,8 @@ class LoggedTable:
                         r = json.load(f).get("files_ref")
                     if r:
                         live_refs.add(r)
-                except (OSError, ValueError):
-                    pass
+                except FileNotFoundError:
+                    pass  # vacuumed concurrently since versions() listed it
             for name in os.listdir(self.log_dir):
                 if not (
                     name.startswith(("files_", ".tmp.files_"))
@@ -692,8 +692,8 @@ class LoggedTable:
                     if now - os.path.getmtime(sp) > 7200.0:
                         os.unlink(sp)
                         removed.append(name)
-                except OSError:
-                    pass
+                except FileNotFoundError:
+                    pass  # a concurrent vacuum reclaimed it after listdir
         return removed
 
 

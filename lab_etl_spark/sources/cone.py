@@ -183,7 +183,7 @@ def parse_cone_bytes(blob: bytes) -> tuple[dict, pd.DataFrame, dict[str, str]]:
                 try:
                     val = float(val)
                 except ValueError:
-                    pass
+                    pass  # non-numeric metadata stays a string
         if key in meta:  # dup keys → list (deatak_cone_parser.py:160-166)
             if not isinstance(meta[key], list):
                 meta[key] = [meta[key]]

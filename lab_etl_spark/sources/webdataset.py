@@ -261,8 +261,8 @@ try:  # Python DataSource API (Spark >= 4.0)
             ):
                 try:
                     os.remove(stray)
-                except OSError:
-                    pass
+                except FileNotFoundError:
+                    pass  # a concurrent commit/abort swept it first
 
         def abort(self, messages):
             import glob as _glob
@@ -270,8 +270,8 @@ try:  # Python DataSource API (Spark >= 4.0)
             for m in messages:
                 try:
                     os.remove(m.tmp_path)
-                except OSError:
-                    pass
+                except FileNotFoundError:
+                    pass  # already published or swept
             # messages only cover tasks that RETURNED a commit message;
             # attempts that died mid-write (and zombie/speculative
             # attempts finishing later) leave *.attempt-*.tmp strays —
@@ -283,8 +283,8 @@ try:  # Python DataSource API (Spark >= 4.0)
             ):
                 try:
                     os.remove(stray)
-                except OSError:
-                    pass
+                except FileNotFoundError:
+                    pass  # a concurrent commit/abort swept it first
 
     class WebDatasetDataSource(DataSource):
         """``spark.read.format("webdataset").load(dir)`` and

@@ -120,13 +120,11 @@ def test_variance_identities_clamped_under_sqrt():
 def test_window_staleness_invariant():
     """The rotation mechanism, self-enforcing (VERDICT r10 item 2): the
     driver hash-checks only the FIRST 50 registry entries per round, so
-    coverage is kept cumulative by rotating the window.  Five rounds of
-    correct hand-rotation is not a mechanism — this is: any registered
+    coverage is kept cumulative by rotating the window.  Any registered
     query whose newest driver-green row would be MORE than MAX_STALE
     rounds old after the upcoming round must sit INSIDE the upcoming
-    50-entry window (so the driver re-verifies it this round).  A
-    forgotten front/drain now fails the suite instead of surfacing as a
-    judge reconciliation footnote."""
+    50-entry window (so the driver re-verifies it this round).  The
+    staleness comes from the same derivation load_all() orders by."""
     import glob
     import re
 
@@ -138,15 +136,16 @@ def test_window_staleness_invariant():
     # the round whose window THIS tree orders is one past the newest
     # recorded driver artifact
     current = max(rounds) + 1
-    from lab_etl_spark.queries import _LAST_GREEN, load_all
+    from lab_etl_spark.queries import last_green, load_all
 
+    green = last_green()
     reg = load_all()
     window = set(list(reg)[:50])
     MAX_STALE = 4  # full rotation of ~211 queries / 50 slots is 5 rounds
     violations = [
-        (n, _LAST_GREEN.get(n, 0))
+        (n, green.get(n, 0))
         for n in reg
-        if current - _LAST_GREEN.get(n, 0) > MAX_STALE and n not in window
+        if current - green.get(n, 0) > MAX_STALE and n not in window
     ]
     assert not violations, (
         f"round {current} window leaves {len(violations)} over-stale "
@@ -154,25 +153,47 @@ def test_window_staleness_invariant():
     )
 
 
-def test_last_green_map_is_regenerated():
-    """_LAST_GREEN must BE tools/regen_last_green.py's output over the
-    CORRECTNESS artifacts on disk — a stale hand-maintained map would
-    order the rotation on wrong staleness and silently starve queries.
-    (This also forces the per-round regeneration chore: landing a new
-    CORRECTNESS_r{N}.json without regenerating the map fails here.)"""
-    mod = _load("regen_last_green")
-    want = {
-        n: r for n, r in mod.last_green().items()
-        if n in mod.registered_names()
-    }
-    from lab_etl_spark.queries import _LAST_GREEN
+def test_last_green_derivation(tmp_path, monkeypatch):
+    """last_green() keeps a query's NEWEST green round (a later red row
+    does not erase it), counts rows-only rows that returned rows, and a
+    _RECHECK entry is fronted until an artifact of its round marks it
+    green."""
+    import json
+    import shutil
 
-    assert _LAST_GREEN == want, (
-        "stale _LAST_GREEN: run `python tools/regen_last_green.py` and "
-        "paste the emitted map into lab_etl_spark/queries/__init__.py "
-        f"(diff keys: { {k for k in set(_LAST_GREEN) ^ set(want)} }, "
-        f"changed: { {k: (_LAST_GREEN.get(k), want.get(k)) for k in set(_LAST_GREEN) & set(want) if _LAST_GREEN[k] != want[k]} })"
+    from lab_etl_spark import queries
+
+    def rec(**kw):
+        return {"rows_match": None, "schema_match": None, "hash_match": None,
+                "spark_rows": None, "oracle_rows": None, "err": None, **kw}
+
+    (tmp_path / "CORRECTNESS_r01.json").write_text(json.dumps({
+        "q_a": rec(hash_match=True),
+        "q_b": rec(err="no_oracle", spark_rows=3),
+        "q_c": rec(err="no_oracle"),
+    }))
+    (tmp_path / "CORRECTNESS_r02.json").write_text(json.dumps({
+        "q_a": rec(hash_match=False, err="hash mismatch"),
+    }))
+    assert queries.last_green(tmp_path) == {"q_a": 1, "q_b": 1}
+
+    # a veteran from the back of the order, green in the newest artifact
+    arts = tmp_path / "artifacts"
+    arts.mkdir()
+    for p in ROOT.glob("CORRECTNESS_r*.json"):
+        shutil.copy(p, arts)
+    green = queries.last_green(arts)
+    veteran = list(queries.load_all())[-1]
+    rnd = max(green.values()) + 1
+    assert green[veteran] == rnd - 1
+    real = queries.last_green
+    monkeypatch.setattr(queries, "last_green", lambda: real(arts))
+    monkeypatch.setattr(queries, "_RECHECK", {veteran: rnd})
+    assert veteran in list(queries.load_all())[:50]
+    (arts / f"CORRECTNESS_r{rnd}.json").write_text(
+        json.dumps({veteran: rec(hash_match=True)})
     )
+    assert veteran not in list(queries.load_all())[:50]
 
 
 def test_bench_continuity_under_ceiling():
