@@ -104,7 +104,12 @@ def main() -> None:
     # Whole-stage codegen + JIT compile hundreds of generated classes for a
     # diverse plan mix; measuring cold conflates compilation (a one-time,
     # size-independent cost) with execution.  Plans are shape-identical at
-    # the smaller sf, so the warm pass compiles what the measured pass runs.
+    # the smaller sf, so the timed passes reuse the classes the warm pass
+    # compiled, provided all of them fit in Spark's codegen class cache
+    # (spark.sql.codegen.cache.maxEntries, 4096 from get_spark; at Spark's
+    # default of 100 the bench set's ~2,300 classes evict each other and
+    # every pass recompiles them).  codegen_compiles in the report counts
+    # what the timed passes compiled.
     warm_dir = os.environ.get(
         "SPARK_GRAFT_WARMUP_SF_DIR", "/root/testdata/sf0.01"
     )
@@ -141,6 +146,10 @@ def main() -> None:
     # pass visits a different third of the list first, so a phase-locked
     # storm hits DIFFERENT queries each pass and the min discards it.
     trials = int(os.environ.get("SPARK_GRAFT_BENCH_TRIALS", "3"))
+    # Janino compiles in this JVM (planning and local-mode task threads).
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = metrics.METRIC_COMPILATION_TIME()
+    compiles_before = compiles.getCount()
     timings: dict[str, float] = {name: float("inf") for name in bench_set}
     # Host-variance floor: a fixed map-only plan (scan + project + noop)
     # whose cost is dominated by per-job overhead, not query compute.
@@ -202,11 +211,13 @@ def main() -> None:
         ).save()
         shuffle_floor = min(shuffle_floor, time.perf_counter() - t0)
         print(f"# pass {t + 1}/{trials} done", file=sys.stderr)
+    codegen_compiles = compiles.getCount() - compiles_before
     timings = {n: round(v, 4) for n, v in sorted(timings.items())}
     for name, v in timings.items():
         print(f"# {name}: {v:.3f}s", file=sys.stderr)
     print(f"# host_floor: {floor:.4f}s", file=sys.stderr)
     print(f"# shuffle_floor: {shuffle_floor:.4f}s", file=sys.stderr)
+    print(f"# codegen_compiles: {codegen_compiles}", file=sys.stderr)
 
     # One timed COLD run for every bench-EXCLUDED query (side-effecting
     # writes, streaming drains, media-literal reads — shapes min-of-3
@@ -385,6 +396,10 @@ def main() -> None:
         "sf": sf,
         "cpus": cpus,
         "extra_conf": extra_conf,
+        "codegen_cache_entries": int(
+            spark.conf.get("spark.sql.codegen.cache.maxEntries")
+        ),
+        "codegen_compiles": codegen_compiles,
         "queries": timings,
         "io_family_queries": io_timings,
         "ratio_vs_baseline": ratios,
